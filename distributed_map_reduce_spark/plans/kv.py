@@ -12,10 +12,18 @@ Reference semantics (SURVEY.md §1.1-§1.4, §2.1 D10-D14):
 - `reconf` re-partitions after membership change
   (`all/store.js:217-285`).
 
-Spark-first translation: a ``KVTable`` wraps a DataFrame
-``(key STRING, value <T>, seq BIGINT)``. ``seq`` is the ingestion order
-that makes LWW deterministic on an immutable DataFrame (SURVEY.md §7.5
-item 2) — ``resolve()`` keeps the max-seq row per key with one window.
+Spark-first translation: a ``KVTable`` wraps a put log, a DataFrame
+``(key STRING, value <T>, seq BIGINT[, _gen INT])``. ``seq`` is the
+ingestion order inside one batch that makes LWW deterministic on an
+immutable DataFrame (SURVEY.md §7.5 item 2). ``_gen`` is the put order:
+``put`` numbers its argument's batches after the receiver's on the
+driver, so recording the order reads no data and adds no aggregate or
+join. The schema metadata of ``_gen`` carries the generation count, so
+a log re-wrapped with ``KVTable(kv.df)`` keeps its order. ``resolve()``
+keeps, per key, the row of the latest put and, within it, the largest
+``seq`` — one window, one exchange on key. A single batch has no
+``_gen`` column; a table wrapped with ``resolved=True`` is already one
+row per key and carries neither column unless its frame has them.
 Placement/hashing (naive/consistent/rendezvous, `util/id.js:107-148`)
 collapses into Spark's hash partitioner: ``reconf(n)`` ==
 ``repartition(n, "key")``, and AQE handles runtime re-partitioning.
@@ -71,14 +79,21 @@ def content_address(*cols) -> F.Column:
     return F.sha2(F.to_json(F.struct(*cols)), 256)
 
 
+_GEN = "_gen"
+_GENS = "kv_generations"  # schema metadata key on _gen: the generation count
+
+
 class KVTable:
     """A named keyed dataset (the reference's group, SURVEY.md §1.1)."""
 
     def __init__(self, df: DataFrame, resolved: bool = False):
         if df.columns[:2] != ["key", "value"]:
             raise ValueError(f"KVTable needs (key, value[, seq]) columns, got {df.columns}")
-        self._df = df if "seq" in df.columns else df.withColumn("seq", F.lit(0).cast("bigint"))
+        if not resolved and "seq" not in df.columns:
+            df = df.withColumn("seq", F.lit(0).cast("bigint"))
+        self._df = df
         self._resolved = resolved
+        self._gens = df.schema[_GEN].metadata[_GENS] if _GEN in df.columns else 1
 
     # -- construction -----------------------------------------------------
     @classmethod
@@ -114,28 +129,39 @@ class KVTable:
 
     # -- the KV verbs -----------------------------------------------------
     def put(self, other: "KVTable | DataFrame") -> "KVTable":
-        """Append new writes (later seq wins on resolve) — D12."""
-        odf = other.df if isinstance(other, KVTable) else KVTable(other).df
-        base = self._df
-        shift = base.agg(F.coalesce(F.max("seq"), F.lit(-1)).alias("m"))
-        # cross-join the 1-row max to keep this fully distributed
-        odf = odf.crossJoin(F.broadcast(shift)).withColumn("seq", F.col("seq") + F.col("m") + 1).drop("m")
-        return KVTable(base.unionByName(odf))
+        """Append new writes (D12): every batch of ``other`` resolves after
+        every batch of this table, whatever their ``seq`` values. The
+        generations shift by a driver-side count, so put runs no job and
+        plans only a union."""
+        new = other if isinstance(other, KVTable) else KVTable(other)
+        log = self._log(0).unionByName(new._log(self._gens))
+        return KVTable(log.withMetadata(_GEN, {_GENS: self._gens + new._gens}))
+
+    def _log(self, shift: int) -> DataFrame:
+        """The frame with ``seq`` and ``_gen`` columns, generations + shift."""
+        df = self._df if "seq" in self._df.columns else self._df.withColumn("seq", F.lit(0).cast("bigint"))
+        gen = F.col(_GEN) + shift if _GEN in df.columns else F.lit(shift)
+        return df.withColumn(_GEN, gen)
 
     def resolve(self) -> DataFrame:
-        """Last-write-wins view: keep max-seq row per key (Q11). One
-        exchange on key; AQE handles skewed hot keys."""
+        """Last-write-wins view (Q11): per key, the row of the latest put,
+        then of the largest ``seq`` within it. One exchange on key; AQE
+        handles skewed hot keys. Columns are the log's without ``_gen``."""
         if self._resolved:
             return self._df
-        w = Window.partitionBy("key").orderBy(F.col("seq").desc())
+        order = [F.col("seq").desc()]
+        if _GEN in self._df.columns:
+            order.insert(0, F.col(_GEN).desc())
+        w = Window.partitionBy("key").orderBy(*order)
         return (
             self._df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .drop("_rn")
+            .drop("_rn", _GEN)
         )
 
     def get(self, key: str) -> DataFrame:
-        """Point read (D11) — predicate pushes into the scan."""
+        """Point read (D11): one key filter over the resolved frame. On a
+        materialized store it reaches the parquet reader as EqualTo(key)."""
         return self.resolve().filter(F.col("key") == key).select("key", "value")
 
     def scan_keys(self) -> DataFrame:
@@ -154,16 +180,20 @@ class KVTable:
         )
 
     def delete(self, keys: list[str] | DataFrame) -> "KVTable":
-        """Delete keys (D13) — planned as a broadcast anti-join, the
-        distributed form of per-key file unlink."""
+        """Delete keys (D13). A key list is a key-set filter on the log (an
+        InSet on the scan); a key DataFrame is a broadcast anti-join, the
+        distributed form of per-key file unlink. Both keep null-key rows:
+        a null never equals a deleted key."""
         if isinstance(keys, DataFrame):
             kdf = keys.select(F.col(keys.columns[0]).alias("key"))
+            df = self._df.join(F.broadcast(kdf), "key", "left_anti")
         else:
-            kdf = self._df.sparkSession.createDataFrame([(k,) for k in keys], "key string")
-        return KVTable(self._df.join(F.broadcast(kdf), "key", "left_anti"))
+            doomed = [k for k in keys if k is not None]
+            df = self._df.filter(F.col("key").isNull() | ~F.col("key").isin(doomed))
+        return KVTable(df, resolved=self._resolved)
 
     def reconf(self, num_partitions: int) -> "KVTable":
         """Re-partition by key (D14). The reference moves only keys whose
         owner changed (`all/store.js:217-285`); Spark's exchange +
         AQE coalescing is the scalable equivalent."""
-        return KVTable(self._df.repartition(num_partitions, "key"))
+        return KVTable(self._df.repartition(num_partitions, "key"), resolved=self._resolved)

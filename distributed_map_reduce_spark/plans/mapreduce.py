@@ -92,7 +92,13 @@ def exec_mr_rdd(
     (Spark's portable_hash — results-identical, fastest) or "consistent"
     (the reference's ring placement, `mapperReducer.js:77-87`) for
     byte-level fidelity of *where* each key group lands. The result bag
-    is placement-independent; only data movement differs."""
+    is placement-independent; only data movement differs.
+
+    ``num_partitions`` defaults to ``min(spark.sql.shuffle.partitions,
+    input partitions)``: Spark's own default-partitioner rule for RDD
+    shuffles (never more reduce tasks than map tasks), which matters here
+    because AQE cannot coalesce an RDD shuffle — a one-file input reduces
+    in one task instead of ``shuffle.partitions`` mostly idle ones."""
     sc = pairs.sparkSession.sparkContext
     rdd = pairs.rdd.map(lambda r: (r[0], r[1]))
     if keys is not None:
@@ -100,7 +106,9 @@ def exec_mr_rdd(
         # (`mapperReducer.js:14-17`); here it's a broadcast semi-filter.
         bkeys = sc.broadcast(frozenset(keys))
         rdd = rdd.filter(lambda kv: kv[0] in bkeys.value)
-    n = num_partitions or int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = num_partitions or min(
+        int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions")), rdd.getNumPartitions()
+    )
     part_fn = {"naive": None, "consistent": consistent_hash_partitioner(n)}[placement]
     kwargs = {"numPartitions": n}
     if part_fn is not None:

@@ -11,6 +11,11 @@ from pyspark.sql import functions as F
 from distributed_map_reduce_spark.plans.kv import KVTable
 
 
+def _log(spark, rows):
+    """A put batch with explicit (key, value, seq); keys may be null."""
+    return KVTable(spark.createDataFrame(rows, "key string, value string, seq bigint"))
+
+
 def test_put_get_roundtrip(spark):
     kv = KVTable.from_pairs(spark, [("jcarb", "Josiah Carberry"), ("ewatson", "Emma Watson")])
     assert kv.get("jcarb").collect()[0]["value"] == "Josiah Carberry"
@@ -29,6 +34,10 @@ def test_put_batches_sequence(spark):
     kv2 = kv.put(KVTable.from_pairs(spark, [("a", "new")]))
     resolved = {r["key"]: r["value"] for r in kv2.resolve().collect()}
     assert resolved == {"a": "new", "b": "keep"}
+    # the put order, not seq, decides first; resolve drops the order column
+    kv3 = _log(spark, [("a", "old", 100), ("b", "keep", 101)]).put(_log(spark, [("a", "new", 0)]))
+    assert {r["key"]: r["value"] for r in kv3.resolve().collect()} == {"a": "new", "b": "keep"}
+    assert kv3.resolve().columns == ["key", "value", "seq"]
 
 
 def test_content_addressed_key(spark):
@@ -128,3 +137,32 @@ def test_consistent_hash_minimal_reshuffle(spark, sf_dir):
     # keys that moved under rendezvous moved TO the new node only
     wrong = df.filter((F.col("rv3") != F.col("rv4")) & (F.col("rv4") != "node-d")).count()
     assert wrong == 0
+
+
+def test_put_runs_no_job(spark):
+    """put only plans a union: no aggregate over the receiver, no job."""
+    a = _log(spark, [("a", "1", 0)])
+    b = _log(spark, [("a", "2", 0)])
+    sc = spark.sparkContext
+    sc.setJobGroup("kv-put-no-job", "put must not run a job")
+    try:
+        a.put(b).put(KVTable(a.put(b).df))
+        assert list(sc.statusTracker().getJobIdsForGroup("kv-put-no-job")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_delete_list_keeps_null_keys_like_antijoin(spark):
+    """delete(list) is a key-set filter; it must return exactly what the
+    delete(DataFrame) anti-join returns, null-key rows included, also when
+    the list itself holds a None."""
+    kv = _log(spark, [("a", "1", 0), (None, "n1", 1), ("b", "2", 2)]).put(
+        _log(spark, [(None, "n2", 0), ("c", "3", 1), ("a", "4", 2)])
+    )
+    doomed = ["a", None, "zz"]
+    by_list = sorted(kv.delete(doomed).resolve().collect(), key=str)
+    by_df = sorted(
+        kv.delete(spark.createDataFrame([(k,) for k in doomed], "k string")).resolve().collect(), key=str
+    )
+    assert by_list == by_df
+    assert {r["key"]: r["value"] for r in by_list} == {None: "n2", "b": "2", "c": "3"}

@@ -483,3 +483,92 @@ def test_bootstrap_poisson_wide_agg_no_row_inflation(spark, sf_dir):
     assert "explode" not in plan, plan[:2000]
     assert "stack" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def _explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+def _kv_batches(spark, tmp_path):
+    """Two put batches on disk, one file each."""
+    paths = []
+    for b in range(2):
+        rows = [(f"k{i % 7}", f"v{b}.{i}", i) for i in range(40)]
+        path = str(tmp_path / f"batch{b}")
+        spark.createDataFrame(rows, "key string, value string, seq bigint").coalesce(1).write.parquet(path)
+        paths.append(path)
+    return [spark.read.parquet(p) for p in paths]
+
+
+def test_kv_put_resolve_single_exchange(spark, tmp_path):
+    """put records the batch order on the driver: resolving a two-batch
+    log is one hash exchange on key, with no aggregate over the receiver
+    and no cross join to shift its seq."""
+    from distributed_map_reduce_spark.plans.kv import KVTable
+
+    a, b = _kv_batches(spark, tmp_path)
+    plan = _explain(KVTable(a).put(b).resolve())
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange hashpartitioning(key#" in plan, plan
+    for op in ("Aggregate", "BroadcastNestedLoopJoin", "CartesianProduct"):
+        assert op not in plan, plan
+
+
+def test_kv_delete_list_is_a_filter(spark, tmp_path):
+    """delete(list) is a key-set filter (an InSet past 10 keys), not a
+    broadcast anti-join against a local relation."""
+    from distributed_map_reduce_spark.plans.kv import KVTable
+
+    a, b = _kv_batches(spark, tmp_path)
+    for doomed in (["k1"], [f"k{i}" for i in range(1, 30)]):
+        plan = _explain(KVTable(a).put(b).delete(doomed).resolve())
+        assert "BroadcastExchange" not in plan and "Join" not in plan, plan
+
+
+def test_kv_get_pushes_key_equality(spark, tmp_path):
+    """get(k) on a materialized store is one filter that reaches the
+    parquet reader as EqualTo(key, k)."""
+    from distributed_map_reduce_spark.plans.kv import KVTable
+
+    a, b = _kv_batches(spark, tmp_path)
+    path = str(tmp_path / "store")
+    KVTable(a).put(b).resolve().select("key", "value").write.parquet(path)
+    plan = _explain(KVTable(spark.read.parquet(path), resolved=True).get("k3"))
+    assert "EqualTo(key,k3)" in plan.split("PushedFilters:")[1].splitlines()[0], plan
+    assert "Exchange" not in plan, plan
+
+
+def test_exec_mr_rdd_reduce_partitions(spark, tmp_path):
+    """The default reduce width is min(shuffle.partitions, input
+    partitions): one reduce task for a one-file input, never more than
+    shuffle.partitions for a many-file one; an explicit count wins."""
+    from distributed_map_reduce_spark.plans.mapreduce import exec_mr_rdd
+
+    def wc_map(key, value):
+        return [{w: 1} for w in value.split()]
+
+    def wc_reduce(key, values):
+        return (key, sum(values))
+
+    rows = [(str(i), f"w{i % 5} w{i % 3}") for i in range(200)]
+    df = spark.createDataFrame(rows, "key string, value string")
+    one, many = str(tmp_path / "one"), str(tmp_path / "many")
+    df.coalesce(1).write.parquet(one)
+    df.repartition(24).write.parquet(many)
+    conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    single = spark.read.parquet(one)
+    assert single.rdd.getNumPartitions() == 1
+    assert exec_mr_rdd(single, wc_map, wc_reduce).getNumPartitions() == 1
+    many_files = spark.read.parquet(many)
+    n_in = many_files.rdd.getNumPartitions()
+    assert exec_mr_rdd(many_files, wc_map, wc_reduce).getNumPartitions() == min(conf, n_in)
+    wide = df.repartition(3 * conf)
+    assert exec_mr_rdd(wide, wc_map, wc_reduce).getNumPartitions() == conf
+    assert exec_mr_rdd(single, wc_map, wc_reduce, num_partitions=5).getNumPartitions() == 5
+    assert sorted(exec_mr_rdd(single, wc_map, wc_reduce).collect()) == sorted(
+        exec_mr_rdd(wide, wc_map, wc_reduce).collect()
+    )

@@ -74,6 +74,42 @@ def test_kv_lww_matches_dict_replay(spark, writes):
     assert got == replay
 
 
+_batch = st.tuples(
+    st.integers(-1000, 1000),  # the batch's first seq: later batches may start lower
+    st.lists(st.tuples(st.sampled_from(["k1", "k2", "k3", "k4"]), st.integers(0, 99).map(str)), min_size=1, max_size=8),
+)
+
+
+@SETTINGS
+@given(batches=st.lists(_batch, min_size=2, max_size=4))
+def test_kv_put_batches_match_dict_replay(spark, batches):
+    """Resolving 2-4 put batches ≡ replaying them into a dict in put
+    order, each batch in seq order, however the puts are composed: a
+    left chain, a put whose argument is itself a multi-put table, and a
+    log re-wrapped with ``KVTable(kv.df)`` before the next put."""
+    tables = [
+        KVTable(spark.createDataFrame([(k, v, s0 + i) for i, (k, v) in enumerate(rows)], "key string, value string, seq bigint"))
+        for s0, rows in batches
+    ]
+    replay: dict[str, str] = {}
+    for _, rows in batches:
+        replay.update(rows)
+
+    chain = tables[0]
+    rewrapped = tables[0]
+    for t in tables[1:]:
+        chain = chain.put(t)
+        rewrapped = KVTable(rewrapped.put(t).df)
+    nested = tables[-1]
+    for t in reversed(tables[1:-1]):
+        nested = t.put(nested)
+    nested = tables[0].put(nested)
+
+    for kv in (chain, nested, rewrapped):
+        got = {r["key"]: r["value"] for r in kv.resolve().select("key", "value").collect()}
+        assert got == replay
+
+
 @SETTINGS
 @given(
     rows=st.lists(

@@ -2,7 +2,7 @@
 to plans/<round>/<name>_<suffix>.txt — the optimization-round evidence
 the judge checks plan claims against.
 
-Usage: python tools/dump_bench_plans.py <suffix> [--round rNN] [--sf DIR] [name ...]
+Usage: python tools/dump_bench_plans.py <suffix> --round DIR [--sf DIR] [name ...]
 """
 
 from __future__ import annotations
@@ -21,10 +21,10 @@ from distributed_map_reduce_spark.session import get_spark  # noqa: E402
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("suffix", help="before|after")
-    ap.add_argument("--round", default="r11", dest="round_dir")
+    ap.add_argument("--round", required=True, dest="round_dir", help="output folder under plans/, e.g. r12")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("names", nargs="*")
-    args = ap.parse_args()
+    args = ap.parse_intermixed_args()
 
     out_dir = os.path.join(REPO, "plans", args.round_dir)
     os.makedirs(out_dir, exist_ok=True)
