@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_int60, md5_int60_sql
 from ..functions.vectors import as_double
 from ..registry import register
 from ..sources import load_table
@@ -40,38 +41,23 @@ N_HASHES = 12
 N_BANDS = 4  # => rows per band r = 3
 SHINGLE_K = 3
 MINHASH_TAU = 0.5
-# dedup_prefix_filter_join broadcast budget, in DISTINCT SETS: below this
-# the probe side (S·(K+1) rows of three longs) and both mask relations
-# (S rows of W≈1–3 packed longs) broadcast. The deserialized hash-
-# relation footprint is ~500 B/set across the three relations (UnsafeRow
-# + open-addressing overhead dominates the 24–50 B of payload), so the
-# threshold pins the broadcast tier to ~200 MB — a production executor's
-# comfortable broadcast headroom. The cliff is MEASURED: the r9 sf30
-# probe (S = 1.16M distinct sets → ~600 MB of broadcast builds) died
-# with UNABLE_TO_ACQUIRE_MEMORY as the pinned relations starved unified
-# execution memory; 400k keeps 3× margin under it. Past the threshold
-# the same algebra runs as keyed shuffle_hash joins. The switch is
-# measured from the materialized set table (one count on checkpointed
-# rows), so the plan adapts to the corpus like AQE does, not to the
-# scale factor label.
-PARTITIONED_SETSIM_SETS = 400_000
-# Partitioned-tier intra-bucket chunk width, in SETS: a (gid, g60)
+# dedup_prefix_filter_join intra-bucket chunk width, in SETS: a (gid, g60)
 # bucket is an indivisible self-join key, so one populous bucket (the
 # g60=0 "no tokens in this group" class grows with the corpus) is a
 # quadratic pair-producer that AQE's skew split cannot touch — skew
 # detection sizes the INPUT partition, which for a 200k-set bucket is a
 # few MB, while the pair fan-out behind it is 2·10¹⁰ rows (measured: 4
-# straggler tasks pinned the r10 sf30 probe past its 1 h budget with 32
-# cores idle). Buckets wider than this split into B = ⌈pop/CHUNK⌉
-# hash-chunks per side; each side replicates B× tagged with the other
-# side's chunk id, the join key widens to (gid, g60, ca, cb), and every
-# pair meets exactly once in exactly one of the B² cells. Per-cell work
-# is bounded by CHUNK² verifies and per-cell shuffle read by ~2·CHUNK
-# rows, so AQE's parallelism-first coalescing packs cells evenly across
-# cores — bytes become an honest proxy for pair work, which is the
-# property the unchunked bucket lacked. Replication cost is pop²/CHUNK
-# rows ≪ the pop² pair stream it spreads. Cold buckets (pop ≤ CHUNK)
-# get B = 1: zero replication, plan identical to the pre-chunk tier.
+# straggler tasks pinned an sf30 run past its 1 h budget with 32 cores
+# idle). Buckets wider than this split into B = ⌈pop/CHUNK⌉ hash-chunks
+# per side; each side replicates B× tagged with the other side's chunk
+# id, the join key widens to (gid, g60, ca, cb), and every pair meets
+# exactly once in exactly one of the B² cells. Per-cell work is bounded
+# by CHUNK² verifies and per-cell shuffle read by ~2·CHUNK rows, so AQE's
+# parallelism-first coalescing packs cells evenly across cores — bytes
+# become an honest proxy for pair work, which is the property the
+# unchunked bucket lacked. Replication cost is pop²/CHUNK rows ≪ the pop²
+# pair stream it spreads. Cold buckets (pop ≤ CHUNK) get B = 1: no
+# replication, a plain keyed join.
 PARTITIONED_SETSIM_CHUNK = 4_096
 NGRAM_TAU = 0.6
 
@@ -89,32 +75,27 @@ def tokens_col(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != "")
 
 
-def shingles_from_tokens(toks: Column, k: int = SHINGLE_K) -> Column:
-    """Distinct word k-shingles from an already-materialized token array.
+def _shingle_list(toks: Column, k: int = SHINGLE_K) -> Column:
+    """Word k-shingles of a token array, in position order, repeats kept.
     ``toks`` MUST be a plain column reference in hot paths: the k
     element_at calls inside the lambda re-evaluate whatever expression
     ``toks`` is per element, so an inlined split() turns O(n) into
     O(n·k·|text|). 1-based `element_at` mirrors DuckDB. Inputs shorter
-    than k produce an EMPTY shingle set — the guard is explicit because
-    Spark's sequence(1, 0) DESCENDS ([1, 0]) and element_at(toks, 0)
-    throws."""
+    than k produce an EMPTY list — the guard is explicit because Spark's
+    sequence(1, 0) DESCENDS ([1, 0]) and element_at(toks, 0) throws."""
     idx = F.when(
         F.size(toks) >= k, F.sequence(F.lit(1), F.size(toks) - (k - 1))
     ).otherwise(F.array().cast("array<int>"))
-    return F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(k)]
-            ),
-        )
+    return F.transform(
+        idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)])
     )
 
 
 def shingles_col(text: Column, k: int = SHINGLE_K) -> Column:
-    """Convenience form for small inputs/tests; hot paths project
-    tokens_col into its own column first (see minhash_lsh_pairs)."""
-    return shingles_from_tokens(tokens_col(text), k)
+    """Distinct word k-shingles of a text column. Convenience form for
+    small inputs/tests; hot paths explode rows through
+    :func:`_shingle_explode` instead."""
+    return F.array_distinct(_shingle_list(tokens_col(text), k))
 
 
 # Universal-hash MinHash: ONE md5 per shingle gives a base integer; the
@@ -130,26 +111,22 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
 
 
+def _shingle_explode(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, s) rows, one per shingle POSITION (repeats kept). The
+    md5-heavy scan is spread across cores first: a single small local
+    parquet file otherwise plans as one input partition (a real cluster
+    scan is already wide)."""
+    toks = docs.repartition(spark_partitions(docs)).select(
+        F.col(id_col).alias("doc_id"), tokens_col(F.col(text_col)).alias("toks")
+    )
+    return toks.select("doc_id", F.explode(_shingle_list(F.col("toks"))).alias("s"))
+
+
 def shingle_rows(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Distinct (doc_id, shingle) ROWS — the fully-relational base of the
     MinHash pipeline (``array_distinct`` on 48-element string arrays costs
     ~2 ms/row; ``dropDuplicates`` is a vectorized exchange)."""
-    # Spread the md5-heavy scan across cores: a single small local parquet
-    # file otherwise plans as one input partition (a real cluster scan is
-    # already wide).
-    toks = docs.repartition(spark_partitions(docs)).select(
-        F.col(id_col).alias("doc_id"), tokens_col(F.col(text_col)).alias("toks")
-    )
-    k = SHINGLE_K
-    # sequence(1, 0) descends in Spark — short docs need an explicit
-    # empty index array (same guard as shingles_from_tokens)
-    idx = F.when(
-        F.size("toks") >= k, F.sequence(F.lit(1), F.size("toks") - (k - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    shingle = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at("toks", i + j) for j in range(k)])
-    )
-    return toks.select("doc_id", F.explode(shingle).alias("s")).dropDuplicates(["doc_id", "s"])
+    return _shingle_explode(docs, id_col, text_col).dropDuplicates(["doc_id", "s"])
 
 
 def shingle_hash_rows_raw(
@@ -160,21 +137,10 @@ def shingle_hash_rows_raw(
     it twice). Consumers that reduce per doc anyway (signature mins are
     duplicate-insensitive; ``collect_set`` dedups inside the same
     aggregation) take this form and skip the (doc_id, h) dedup exchange
-    entirely (r11, guide §2.4); the relational join-count verify needs
-    distinct ROWS and goes through :func:`shingle_hash_rows`."""
-    toks = docs.repartition(spark_partitions(docs)).select(
-        F.col(id_col).alias("doc_id"), tokens_col(F.col(text_col)).alias("toks")
-    )
-    k = SHINGLE_K
-    idx = F.when(
-        F.size("toks") >= k, F.sequence(F.lit(1), F.size("toks") - (k - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    shingle = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at("toks", i + j) for j in range(k)])
-    )
-    return toks.select("doc_id", F.explode(shingle).alias("s")).select(
-        "doc_id",
-        F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("bigint").alias("h"),
+    entirely; the relational join-count verify needs distinct ROWS and
+    goes through :func:`shingle_hash_rows`."""
+    return _shingle_explode(docs, id_col, text_col).select(
+        "doc_id", md5_int60(F.col("s")).alias("h")
     )
 
 
@@ -182,13 +148,11 @@ def shingle_hash_rows(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Distinct (doc_id, h) rows, h = the 60-bit md5 prefix of the word
-    shingle — the hot-path twin of :func:`shingle_rows` (r9). MinHash
-    banding needs only h % P and exact-Jaccard verification already
-    intersects these SAME 60-bit prefixes (see :func:`verify_jaccard`),
-    so hashing once at the explode and deduplicating on (doc_id, h)
-    lets banding, both verify joins, and the size aggregate all reuse
-    ONE integer-keyed exchange — the string form paid a second md5 pass
-    plus a second full (doc_id, h) dedup exchange inside verify.
+    shingle — the hot-path twin of :func:`shingle_rows`. MinHash banding
+    needs only h % P and exact-Jaccard verification intersects these SAME
+    60-bit prefixes (see :func:`verify_jaccard`), so hashing once at the
+    explode and deduplicating on (doc_id, h) lets banding, both verify
+    joins, and the size aggregate all reuse ONE integer-keyed exchange.
     Output-identical to the string pipeline: the per-doc distinct-h set
     is what every downstream consumer reduces over either way (min for
     signatures, count for sizes, equi-join for intersections)."""
@@ -197,25 +161,20 @@ def shingle_hash_rows(
     )
 
 
-def banded_keys(sh_rows: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_key) LSH bucket rows: one hash-aggregate with
-    k vectorized ``min`` columns (universal hashing over the per-shingle
-    md5 int); band keys concatenate signature columns. Accepts either
-    string shingle rows (doc_id, s) or pre-hashed rows (doc_id, h) from
-    :func:`shingle_hash_rows` — the signature min is over the same
-    integer multiset either way."""
-    b_col = (
-        (F.col("h") % MINHASH_P)
-        if "h" in sh_rows.columns
-        else (F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("bigint") % MINHASH_P)
-    )
-    base = sh_rows.select("doc_id", b_col.alias("b"))
-    sig = base.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(HASH_A[s]) * F.col("b") + F.lit(HASH_B[s])) % MINHASH_P).alias(f"h{s}")
-            for s in range(N_HASHES)
-        ]
-    )
+def _signature(b: Column) -> list[Column]:
+    """The N_HASHES MinHash aggregate columns h0..h{k-1} over per-shingle
+    base integers ``b`` (already reduced mod P): one vectorized ``min``
+    per universal hash (a_s·b + b_s) mod P."""
+    return [
+        F.min((F.lit(HASH_A[s]) * b + F.lit(HASH_B[s])) % MINHASH_P).alias(f"h{s}")
+        for s in range(N_HASHES)
+    ]
+
+
+def _bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_key) LSH bucket rows from a frame carrying
+    the signature columns: band b's key concatenates its r = k/bands
+    signature values."""
     r = N_HASHES // N_BANDS
     return sig.select(
         "doc_id",
@@ -230,14 +189,10 @@ def banded_keys(sh_rows: DataFrame) -> DataFrame:
     )
 
 
-def band_candidates(sh_rows: DataFrame) -> DataFrame:
-    """MinHash-band candidate pairs (doc_a < doc_b), ids only: candidates
-    share a (band_id, band_key) bucket. This is THE candidate generator
-    for every exact PAIR verifier in this module — bucket-bounded, never
-    block-quadratic in candidate generation, but PAIR-quadratic inside a
-    bucket by construction (a 100-clone family yields C(100,2) bucket
-    pairs). Cluster-level consumers use :func:`star_candidates`."""
-    banded = banded_keys(sh_rows)
+def _bucket_pairs(banded: DataFrame) -> DataFrame:
+    """Ids-only (doc_a < doc_b) pairs sharing a (band_id, band_key)
+    bucket: the bucket self-join. PAIR-quadratic inside a bucket by
+    construction (a 100-clone family yields C(100,2) pairs)."""
     return (
         banded.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
         .join(banded.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key"),
@@ -248,41 +203,63 @@ def band_candidates(sh_rows: DataFrame) -> DataFrame:
     )
 
 
-LSH_BUCKET_CAP = 16  # band_candidates_capped: drop buckets larger than this
-
-
-def band_candidates_capped(sh_rows: DataFrame, cap: int = LSH_BUCKET_CAP) -> DataFrame:
-    """Pair candidates from SIZE-CAPPED LSH buckets: buckets with more
-    than ``cap`` members are dropped entirely before the pair join, so
-    candidate volume is bounded by Σ C(min(n, cap), 2) ≤ buckets·C(cap,2)
-    — LINEAR in the corpus, whatever the clone structure. This is the
-    executable form of the module's degree-cap triage for pair-exact
-    graph consumers (graph.py edge-feed policy): an over-cap bucket is a
-    template/boilerplate family whose pairwise structure is C(n,2) BY
-    CONSTRUCTION — the capped variant surrenders exactly those hubs
-    (they are what `dedup_minhash_clusters` handles linearly via star
-    edges) and keeps every pair among ordinary documents. Bucket sizing
-    is one unordered window over the banded rows — the same single
-    exchange `star_candidates` pays for its hub min."""
-    from pyspark.sql import Window
-
-    banded = banded_keys(sh_rows)
+def _cap_filter(banded: DataFrame, cap: int) -> DataFrame:
+    """Banded rows of buckets with at most ``cap`` members: bucket sizing
+    is one unordered window over the banded rows (whole-partition frame,
+    no sort) — the same single exchange :func:`_stars` pays for its hub."""
     bn = F.count(F.lit(1)).over(Window.partitionBy("band_id", "band_key"))
-    kept = banded.withColumn("bn", bn).filter(F.col("bn") <= cap)
+    return banded.withColumn("bn", bn).filter(F.col("bn") <= cap)
+
+
+def _stars(banded: DataFrame) -> DataFrame:
+    """(doc_a = hub, doc_b) edges: per bucket a STAR from the bucket's min
+    doc_id instead of all C(n,2) pairs — Σ(n−1) edges connect exactly the
+    same buckets. Hub resolution is one UNORDERED window min per bucket:
+    one exchange of the banded rows (an agg + join-back form pays two
+    exchanges plus a join stage for the same answer)."""
+    hub = F.min("doc_id").over(Window.partitionBy("band_id", "band_key"))
     return (
-        kept.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-        .join(
-            kept.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key"),
-            ["band_id", "band_key"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+        banded.withColumn("hub", hub)
+        .filter(F.col("doc_id") != F.col("hub"))
+        .select(F.col("hub").alias("doc_a"), F.col("doc_id").alias("doc_b"))
         .distinct()
     )
 
 
+def banded_keys(sh_rows: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_key) LSH bucket rows: one hash-aggregate with
+    k vectorized ``min`` columns (universal hashing over the per-shingle
+    md5 int); band keys concatenate signature columns. Accepts either
+    string shingle rows (doc_id, s) or pre-hashed rows (doc_id, h) from
+    :func:`shingle_hash_rows` — the signature min is over the same
+    integer multiset either way."""
+    h = F.col("h") if "h" in sh_rows.columns else md5_int60(F.col("s"))
+    base = sh_rows.select("doc_id", (h % MINHASH_P).alias("b"))
+    return _bands(base.groupBy("doc_id").agg(*_signature(F.col("b"))))
+
+
+def band_candidates(sh_rows: DataFrame) -> DataFrame:
+    """MinHash-band candidate pairs (doc_a < doc_b), ids only: candidates
+    share a (band_id, band_key) bucket. This is THE candidate generator
+    for every exact PAIR verifier in this module — bucket-bounded, never
+    block-quadratic in candidate generation, but PAIR-quadratic inside a
+    bucket. Cluster-level consumers use :func:`star_candidates`."""
+    return _bucket_pairs(banded_keys(sh_rows))
+
+
+def star_candidates(sh_rows: DataFrame) -> DataFrame:
+    """LINEAR-output LSH candidates: the bucket stars of :func:`_stars`,
+    so connected components over (verified) star edges replace the
+    pair-quadratic bucket join for cluster-level dedup (27.2M pairs →
+    ~0.5M edges on the sf10 clone-family fixture)."""
+    return _stars(banded_keys(sh_rows))
+
+
+LSH_BUCKET_CAP = 16  # minhash_lsh_pairs_capped: drop buckets larger than this
+
+
 def _per_doc_minhash(sh_raw: DataFrame) -> DataFrame:
-    """(doc_id, h0..h{k-1}, hs, n): the 12 signature mins, the doc's
+    """(doc_id, h0..h{k-1}, hs, n): the signature mins, the doc's
     distinct shingle-hash array, and its size from ONE doc-keyed
     aggregation, pinned behind an explicit repartition("doc_id") so the
     band explode and both array-verify join sides reuse a single
@@ -291,44 +268,16 @@ def _per_doc_minhash(sh_raw: DataFrame) -> DataFrame:
     :func:`minhash_star_pairs` for why the pair-quadratic generator must
     NOT use the array verify.
 
-    r11 (guide §2.4 — remove shuffles outright): takes RAW hash rows
-    (:func:`shingle_hash_rows_raw`) and dedups INSIDE this aggregation —
-    ``min`` is duplicate-insensitive, ``collect_set`` IS the per-doc
-    distinct set, and ``n = size(hs)`` — so the upstream (doc_id, h)
-    dropDuplicates exchange (a second full shuffle of the shingle table)
-    disappears. Same signature mins → same band keys → same candidates;
-    same distinct array (order irrelevant to array_intersect) → same
-    verified pairs; digest-verified at sf0.01/sf0.1."""
-    b = F.col("h") % MINHASH_P
+    Takes RAW hash rows (:func:`shingle_hash_rows_raw`) and dedups INSIDE
+    this aggregation — ``min`` is duplicate-insensitive, ``collect_set``
+    IS the per-doc distinct set, and ``n = size(hs)`` — so no upstream
+    (doc_id, h) dropDuplicates exchange (a second full shuffle of the
+    shingle table) is needed."""
     return (
         sh_raw.groupBy("doc_id")
-        .agg(
-            *[
-                F.min((F.lit(HASH_A[s]) * b + F.lit(HASH_B[s])) % MINHASH_P).alias(f"h{s}")
-                for s in range(N_HASHES)
-            ],
-            F.collect_set("h").alias("hs"),
-        )
+        .agg(*_signature(F.col("h") % MINHASH_P), F.collect_set("h").alias("hs"))
         .withColumn("n", F.size("hs").cast("bigint"))
         .repartition("doc_id")
-    )
-
-
-def _banded_from_per_doc(per_doc: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_key) from the per-doc signature columns —
-    the same band keys :func:`banded_keys` derives, read off the shared
-    per-doc materialization instead of a second signature aggregate."""
-    r = N_HASHES // N_BANDS
-    return per_doc.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws("|", *[F.col(f"h{bb * r + j}") for j in range(r)])
-                    for bb in range(N_BANDS)
-                ]
-            )
-        ).alias("band_id", "band_key"),
     )
 
 
@@ -347,7 +296,7 @@ def _verify_jaccard_arrays(cand: DataFrame, per_doc: DataFrame, tau: float) -> D
     arr_b = per_doc.select(
         F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"), F.col("n").alias("n_b")
     )
-    # shuffle_hash keeps the plan shape scale-invariant (r9 sf30 lesson:
+    # shuffle_hash keeps the plan shape scale-invariant (sf30 lesson:
     # AQE's compressed-bytes estimate can flip a corpus-sized side into
     # a broadcast build that OOMs the driver).
     joined = (
@@ -376,61 +325,27 @@ def minhash_lsh_pairs_capped(
     cap: int = LSH_BUCKET_CAP,
 ) -> DataFrame:
     """Verified near-dup pairs from size-capped LSH buckets — the
-    scale-bounded twin of :func:`minhash_lsh_pairs` (r10, VERDICT r9
-    missing #3): same shingle/sign/band/verify algebra, but mega-buckets
-    are dropped before the pair join, so the output (and every shuffle)
-    stays linear on clone-heavy corpora where the uncapped pair list
-    grows as clones².
+    scale-bounded twin of :func:`minhash_lsh_pairs`: same shingle/sign/
+    band/verify algebra, but buckets with more than ``cap`` members are
+    dropped before the pair join, so candidate volume is bounded by
+    Σ C(min(n, cap), 2) ≤ buckets·C(cap,2) — LINEAR in the corpus,
+    whatever the clone structure. This is the executable form of the
+    degree-cap triage for pair-exact graph consumers (graph.py edge-feed
+    policy): an over-cap bucket is a template/boilerplate family whose
+    pairwise structure is C(n,2) BY CONSTRUCTION — the capped variant
+    surrenders exactly those hubs (they are what `dedup_minhash_clusters`
+    handles linearly via star edges) and keeps every pair among ordinary
+    documents. With ``cap`` at least the largest bucket it emits exactly
+    the :func:`minhash_lsh_pairs` rows.
 
-    r10 OPTIMIZATION: because the cap bounds candidates at
-    Σ C(min(n, cap), 2) — linear — this generator qualifies for the same
-    array verify as the star path (see :func:`minhash_star_pairs`): one
-    per-doc aggregation feeds band keys, bucket sizing, and both verify
-    sides; the shingle table crosses one exchange instead of three.
-    Output-identical (same band keys → same kept buckets → same pairs;
-    distinct-array intersection == the join count), digest-verified at
-    sf0.01/sf0.1/sf1. r11: feeds from RAW hash rows — the per-doc
-    aggregation dedups (see :func:`_per_doc_minhash`), one exchange
-    fewer."""
-    from pyspark.sql import Window
-
+    Because the cap bounds candidates linearly, this generator qualifies
+    for the same array verify as the star path (see
+    :func:`minhash_star_pairs`): one per-doc aggregation feeds band keys,
+    bucket sizing, and both verify sides; the shingle table crosses one
+    exchange instead of three."""
     per_doc = _per_doc_minhash(shingle_hash_rows_raw(docs, id_col, text_col))
-    banded = _banded_from_per_doc(per_doc)
-    bn = F.count(F.lit(1)).over(Window.partitionBy("band_id", "band_key"))
-    kept = banded.withColumn("bn", bn).filter(F.col("bn") <= cap)
-    cand = (
-        kept.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-        .join(
-            kept.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key"),
-            ["band_id", "band_key"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = _bucket_pairs(_cap_filter(_bands(per_doc), cap))
     return _verify_jaccard_arrays(cand, per_doc, tau)
-
-
-def star_candidates(sh_rows: DataFrame) -> DataFrame:
-    """LINEAR-output LSH candidates: per (band_id, band_key) bucket emit a
-    STAR from the bucket's min doc_id instead of all C(n,2) pairs —
-    Σ(n−1) edges connect exactly the same buckets, so connected
-    components over (verified) star edges replace the pair-quadratic
-    bucket join for cluster-level dedup (VERDICT r7 #1: 27.2M pairs →
-    ~0.5M edges on the sf10 clone-family fixture). Hub resolution is one
-    UNORDERED window min per bucket (whole-partition frame — no sort):
-    one exchange of the banded rows, where the r8 agg+join-back form
-    paid two exchanges plus a join stage for the same answer."""
-    from pyspark.sql import Window
-
-    banded = banded_keys(sh_rows)
-    hub = F.min("doc_id").over(Window.partitionBy("band_id", "band_key"))
-    return (
-        banded.withColumn("hub", hub)
-        .filter(F.col("doc_id") != F.col("hub"))
-        .select(F.col("hub").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-        .distinct()
-    )
 
 
 def minhash_lsh_pairs(
@@ -444,62 +359,51 @@ def minhash_lsh_pairs(
 
     Fully relational shape — no wide array columns anywhere:
 
-    1. :func:`shingle_rows` explodes to distinct (doc_id, shingle) rows,
+    1. :func:`shingle_hash_rows` explodes to distinct (doc_id, h) rows,
     2. :func:`band_candidates` signs + bands them; candidates are ids-only,
-    3. verify = join-count: |A∩B| from an equi-join on shingle,
+    3. :func:`verify_jaccard`: |A∩B| from an equi-join on h,
        |A∪B| = |A|+|B|−|A∩B| — never materializes a pair of arrays.
 
     At 100 TB every stage is a narrow project or one keyed exchange with
-    map-side combine; the checkpointed row tables are what a production
-    pipeline writes out as the LSH index."""
-    # sh_rows is consumed by the signature agg, both verify joins, and
-    # the size agg. No persist/checkpoint barrier: all four consumers
-    # share the dropDuplicates exchange, which Spark dedupes to one
-    # physical computation (ReusedExchange) — and unlike persist/
-    # localCheckpoint, nothing accumulates driver-side across calls
-    # (persist taxes every later CacheManager lookup; checkpoint blocks
-    # pile up until a cleaner storm stalls some later job).
+    map-side combine; the row tables are what a production pipeline
+    writes out as the LSH index."""
+    # sh_h is consumed by the signature agg, both verify joins, and the
+    # size agg. No persist/checkpoint barrier: all four consumers share
+    # the dropDuplicates exchange, which Spark dedupes to one physical
+    # computation (ReusedExchange) — and unlike persist/localCheckpoint,
+    # nothing accumulates driver-side across calls (persist taxes every
+    # later CacheManager lookup; checkpoint blocks pile up until a
+    # cleaner storm stalls some later job).
     sh_h = shingle_hash_rows(docs, id_col, text_col)
     return verify_jaccard(band_candidates(sh_h), sh_h, tau)
 
 
-def verify_jaccard(cand: DataFrame, sh_rows: DataFrame, tau: float) -> DataFrame:
+def verify_jaccard(cand: DataFrame, sh_h: DataFrame, tau: float) -> DataFrame:
     """Exact-Jaccard verification of an ids-only candidate set against
-    the (doc_id, shingle) row table: |A∩B| from an equi-join on shingle,
-    |A∪B| = |A|+|B|−|A∩B| — never materializes a pair of arrays.
+    the distinct (doc_id, h) rows of :func:`shingle_hash_rows`: |A∩B|
+    from an equi-join on h, |A∪B| = |A|+|B|−|A∩B| — never materializes
+    a pair of arrays.
 
     The join runs on a 60-bit md5 prefix of the shingle instead of the
-    ~50-byte shingle string (r8: the verify join was the hottest shuffle
-    of the sf10 dedup headliner — hashed keys cut its width ~4×). The
+    ~50-byte shingle string (the verify join was the hottest shuffle of
+    the sf10 dedup headliner — hashed keys cut its width ~4×). The
     DuckDB twin (_verified_sql) intersects the SAME md5-prefix lists, so
     a 60-bit collision — ~3e-4 expected per 26M-shingle fixture —
     changes both engines identically and the hash-equality gate holds
     unconditionally; at driver scale (57k shingles) collision odds are
-    ~1e-9 and outputs are bit-identical to the string-keyed form.
-
-    Accepts pre-hashed (doc_id, h) rows from :func:`shingle_hash_rows`
-    as-is (already distinct — no second dedup exchange); string rows
-    get hashed + deduplicated here."""
-    sh_h = (
-        sh_rows
-        if "h" in sh_rows.columns
-        else sh_rows.select(
-            "doc_id",
-            F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("bigint").alias("h"),
-        ).dropDuplicates(["doc_id", "h"])
-    )
+    ~1e-9 and outputs are bit-identical to the string-keyed form."""
     sizes = sh_h.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    # shuffle_hash hints on BOTH verify joins (r9, caught by the sf30
-    # probe): every join side here is corpus-sized by construction
-    # (candidates ~ O(docs); the shingle-hash table ~ O(docs·shingles);
-    # the first join's output ~ O(candidates · shingles/doc), ~95M rows
-    # at sf30), so broadcast is never the right strategy past toy scale
-    # — but AQE sizes broadcast builds by COMPRESSED shuffle bytes and
-    # at sf30 flipped a sub-64MB-compressed side into a 1 GiB+
-    # deserialized build that blew driver/executor memory (hinting only
-    # the second join re-OOMed: the first join's broadcast still
-    # anchors the over-eager plan). Pinning both keeps the plan shape
-    # scale-invariant; the sf0.1 cost is ~1s of small shuffles on the
+    # shuffle_hash hints on BOTH verify joins (caught by the sf30 probe):
+    # every join side here is corpus-sized by construction (candidates ~
+    # O(docs); the shingle-hash table ~ O(docs·shingles); the first
+    # join's output ~ O(candidates · shingles/doc), ~95M rows at sf30),
+    # so broadcast is never the right strategy past toy scale — but AQE
+    # sizes broadcast builds by COMPRESSED shuffle bytes and at sf30
+    # flipped a sub-64MB-compressed side into a 1 GiB+ deserialized
+    # build that blew driver/executor memory (hinting only the second
+    # join re-OOMed: the first join's broadcast still anchors the
+    # over-eager plan). Pinning both keeps the plan shape scale-
+    # invariant; the sf0.1 cost is ~1s of small shuffles on the
     # headliner — the price of a plan that survives every decade.
     inter = (
         cand.hint("shuffle_hash")
@@ -536,42 +440,25 @@ def minhash_star_pairs(
     (the full-pair generator would keep it). On clone-family corpora the
     hub is itself a family member, so family recall is unchanged.
 
-    r10 OPTIMIZATION (guide §2.3/§2.4 — shuffle fewer bytes, remove
-    shuffles): because star edges are LINEAR in the corpus, verification
-    switches from the row-relational join-count (which shuffled the full
-    (doc_id, h) table twice — once per pair side — then paid an
-    aggregation exchange and two more size joins) to per-doc hash ARRAYS:
-    ONE groupBy(doc_id) emits the 12 signature mins, the doc's distinct-h
-    array, and its size together; candidates attach the two arrays with
-    two edge-sized joins and compute |A∩B| as
-    ``size(array_intersect(hs_a, hs_b))`` in the projection. Both sides
-    of ``array_intersect`` are distinct by construction (dropDuplicates
-    upstream), so its distinct-intersection semantics equal the join
-    count — measured digest-identical at sf0.01/sf0.1/sf1. Plan effect at
-    sf0.1: 8 exchanges → 4; the 260k-row shingle table crosses ONE
-    exchange (the signature agg it always paid) instead of three; the
-    pair-side shuffles carry only the 258 candidate edges. This stays
-    scale-safe precisely because the star feed bounds pairs at Σ(n−1):
-    the pair-quadratic generator `minhash_lsh_pairs` keeps the
-    relational verify, whose fanned intermediate never carries arrays
-    across an exchange (the module's NOTHING-PAIR-SIZED rule).
-
-    r11 (guide §2.4): the (doc_id, h) dropDuplicates exchange is gone
-    too — the per-doc aggregation consumes RAW hash rows and dedups via
-    collect_set (see :func:`_per_doc_minhash`), so the shingle table now
-    crosses NO standalone dedup exchange before the signature agg."""
-    from pyspark.sql import Window
-
+    Why the array verify (shuffle fewer bytes, remove shuffles): because
+    star edges are LINEAR in the corpus, verification uses per-doc hash
+    ARRAYS instead of the row-relational join-count (which shuffles the
+    full (doc_id, h) table twice — once per pair side — then pays an
+    aggregation exchange and two more size joins): ONE groupBy(doc_id)
+    (:func:`_per_doc_minhash`) emits the signature mins, the doc's
+    distinct-h array, and its size together; candidates attach the two
+    arrays with two edge-sized joins and compute |A∩B| as
+    ``size(array_intersect(hs_a, hs_b))`` in the projection — measured
+    digest-identical to the join count at sf0.01/sf0.1/sf1. Plan effect
+    at sf0.1: 8 exchanges → 4; the shingle table crosses ONE exchange
+    (the signature agg) instead of three; the pair-side shuffles carry
+    only the candidate edges. This stays scale-safe precisely because
+    the star feed bounds pairs at Σ(n−1): the pair-quadratic generator
+    `minhash_lsh_pairs` keeps the relational verify, whose fanned
+    intermediate never carries arrays across an exchange (the module's
+    NOTHING-PAIR-SIZED rule)."""
     per_doc = _per_doc_minhash(shingle_hash_rows_raw(docs, id_col, text_col))
-    banded = _banded_from_per_doc(per_doc)
-    hub = F.min("doc_id").over(Window.partitionBy("band_id", "band_key"))
-    cand = (
-        banded.withColumn("hub", hub)
-        .filter(F.col("doc_id") != F.col("hub"))
-        .select(F.col("hub").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-        .distinct()
-    )
-    return _verify_jaccard_arrays(cand, per_doc, tau)
+    return _verify_jaccard_arrays(_stars(_bands(per_doc)), per_doc, tau)
 
 
 def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -665,7 +552,7 @@ _MINHASH_BAND_SQL = f"""toks AS (
 ), ints AS (
   SELECT doc_id, shingles,
          list_transform(shingles,
-                        x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) % {MINHASH_P}) AS b
+                        x -> {md5_int60_sql('x')} % {MINHASH_P}) AS b
   FROM sh
 ), sig AS (
   SELECT doc_id, shingles,
@@ -685,7 +572,7 @@ _MINHASH_CAND_SQL = f"""{_MINHASH_BAND_SQL}, cand AS (
   WHERE a.doc_id < b.doc_id
 )"""
 
-# Capped-bucket candidates: mirror of band_candidates_capped — bucket
+# Capped-bucket candidates: mirror of minhash_lsh_pairs_capped — bucket
 # sizes from the same banded rows, over-cap buckets dropped before the
 # pair join (the scale-bounded pair feed; see minhash_lsh_pairs_capped).
 _MINHASH_CAND_CAPPED_SQL = f"""{_MINHASH_BAND_SQL}, bsz AS (
@@ -721,7 +608,7 @@ def _verified_sql(cand_sql: str, tau: float = MINHASH_TAU) -> str:
 WITH {cand_sql}, shh AS (
   SELECT doc_id,
          list_distinct(list_transform(shingles,
-             x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT))) AS hs
+             x -> {md5_int60_sql('x')})) AS hs
   FROM sh
 ), verified AS (
   SELECT doc_a, doc_b,
@@ -1026,17 +913,9 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sh_rows = shingle_rows(docs)
     cand = band_candidates(sh_rows)
-    base = sh_rows.select(
-        "doc_id",
-        "s",
-        (F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("bigint") % MINHASH_P).alias("b"),
-    )
+    base = sh_rows.select("doc_id", "s", (md5_int60(F.col("s")) % MINHASH_P).alias("b"))
     sig = base.groupBy("doc_id").agg(
-        F.collect_set("s").alias("shingles"),
-        *[
-            F.min((F.lit(HASH_A[s]) * F.col("b") + F.lit(HASH_B[s])) % MINHASH_P).alias(f"h{s}")
-            for s in range(N_HASHES)
-        ],
+        F.collect_set("s").alias("shingles"), *_signature(F.col("b"))
     )
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
@@ -1225,12 +1104,13 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     group; candidates join on (group, md5(group-token-ids)), with
     explicit empty-group rows so both-empty groups still match; (3)
     an exact integer length filter (19·min(na,nb) ≥ 9·(na+nb)) and the
-    streaming exact verify 19·|A∩B| ≥ 9·(na+nb) — the candidate stream
-    flows probe→verify→filter in one stage against a broadcast
-    bitmask-chunk lookup (see the mask-chunk note in the body:
-    ceil(vocab/62) packed words per set, intersect = popcount of AND,
-    data-derived width mirrored in SQL), nothing pair-sized is ever shuffled,
-    dedup happens after the τ filter on true pairs only; (4) per-doc
+    streaming exact verify 19·|A∩B| ≥ 9·(na+nb) over bitmask chunks
+    (see the mask-chunk note in the body: ceil(vocab/62) packed words
+    per set, intersect = popcount of AND, data-derived width mirrored
+    in SQL) — the masks travel WITH the probe rows, so the candidate
+    stream flows pair→verify→filter inside the join stage, nothing
+    pair-sized is ever shuffled, and dedup happens after the τ filter on
+    true pairs only; (4) per-doc
     expansion WITHOUT materializing doc pairs: a doc in set s has
     degree (cnt_s − 1) + Σ_{t: J(s,t)≥τ} cnt_t (same-set twins always
     qualify at J = 1.0, and identical sets are the ONLY J = 1.0 pairs),
@@ -1252,16 +1132,14 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups stay df-balanced). Every downstream frame is keyed by
     set_id or doc_id; no window exceeds set size or 2 rows/doc.
 
-    Two physical tiers keyed on the MEASURED distinct-set count S
-    (r10, VERDICT r9 #3): below PARTITIONED_SETSIM_SETS the probe side
-    and both mask relations broadcast and the candidate stream flows
-    probe→verify→filter in one stage (the S ≪ D premise); past it —
-    the r9 sf30 probe OOMed here at S≈4.5M slots
-    (UNABLE_TO_ACQUIRE_MEMORY) — the same candidate/verify algebra
-    runs as keyed shuffle_hash joins on (gid, g60) and set id, so the
-    third decade completes without any broadcast of a corpus-sized
-    relation. Output is row-identical across tiers; only the join
-    strategy adapts, the way AQE would if it could see the fan-out."""
+    One physical plan at every scale, the keyed postings join of
+    V-SMART-Join (VLDB 2012): each set's (gid, g60) probe rows join the
+    set's mask by set id, then self-join on (gid, g60, ca, cb) with
+    shuffle_hash pinned — no broadcast of any corpus-sized relation (a
+    broadcast variant of this join OOMed at sf30, S≈1.2M sets), and no
+    count probe at construction time. Hot buckets are hash-chunked (see
+    PARTITIONED_SETSIM_CHUNK); each pair meets in exactly one chunk
+    cell, so the chunk grid never changes the output."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tok = docs.select(
         "doc_id",
@@ -1293,17 +1171,15 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sid",
         F.row_number()
         # frame: bounded (distinct-set grain — S ≪ D by the set-factoring
-        # frame: premise, the same premise that broadcasts the mask lookup)
+        # frame: premise)
         .over(Window.orderBy("set_id"))
         .cast("bigint"),
     )
-    # Materialize the distinct-set table once (r10): it feeds the token
-    # ranking, the grid, the per-doc expansion, AND the broadcast-vs-
-    # partitioned strategy decision below — the count that drives the
-    # decision would otherwise re-run the whole tokenize→distinct
-    # pipeline, and each downstream reference re-reads materialized rows.
+    # Materialize the distinct-set table once: it feeds the token
+    # ranking, the grid and the per-doc expansion, and each of those
+    # references re-reads materialized rows instead of re-running the
+    # whole tokenize→distinct pipeline.
     sets_ = sets_.localCheckpoint(eager=True)
-    n_sets = sets_.count()
     stok = sets_.select("sid", F.explode("ws").alias("w"))
     sfreq = stok.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
     tid_map = sfreq.select(
@@ -1363,10 +1239,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stok_t.crossJoin(F.broadcast(kdf))
         .groupBy("sid", (F.col("tid") % (F.col("k") + 1)).alias("gid"))
         .agg(
-            F.expr(
-                "CAST(conv(substring(md5(concat_ws(',',"
-                " sort_array(collect_list(tid)))), 1, 15), 16, 10) AS BIGINT)"
-            ).alias("g60")
+            md5_int60(F.concat_ws(",", F.sort_array(F.collect_list("tid")))).alias("g60")
         )
     )
     grid = (
@@ -1378,90 +1251,54 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sid", "gid", F.coalesce("g60", F.lit(0).cast("bigint")).alias("g60")
     )
     sl = masks.join(ssize, "sid").select("sid", "mw", "n")
-    sla = sl.select(
-        F.col("sid").alias("sa"), F.col("mw").alias("mw_a"), F.col("n").alias("na")
+    # NOTHING PAIR-SIZED ever crosses a shuffle boundary: joining
+    # candidates to their masks after the pair join wrote 63 GB of
+    # pair-stream shuffle at sf30 before filling the disk. So the masks
+    # travel WITH the probe rows instead — one input-sized shuffle_hash
+    # join (S·(K+1) rows widened by W≈1–3 longs + n) — and the
+    # (gid, g60, ca, cb) self-join then produces pairs, popcount-
+    # verifies, and τ-filters INSIDE one stage. shuffle_hash is pinned
+    # everywhere (corpus-sized sides; never a compressed-bytes broadcast
+    # flip), and the checkpoint keeps the enrich join from running once
+    # per self-join side. Hot buckets are hash-chunked B = ⌈pop/CHUNK⌉
+    # ways per side (see PARTITIONED_SETSIM_CHUNK).
+    bpop = pat.groupBy("gid", "g60").agg(
+        F.count(F.lit(1)).cast("bigint").alias("bpop")
     )
-    slb = sl.select(
-        F.col("sid").alias("sb"), F.col("mw").alias("mw_b"), F.col("n").alias("nb")
+    enriched = (
+        pat.hint("shuffle_hash")
+        .join(sl.hint("shuffle_hash"), "sid")
+        .hint("shuffle_hash")
+        .join(bpop.hint("shuffle_hash"), ["gid", "g60"])
+        .withColumn(
+            "nch",
+            F.expr(
+                "CAST((bpop + {c} - 1) DIV {c} AS BIGINT)".format(
+                    c=PARTITIONED_SETSIM_CHUNK
+                )
+            ),
+        )
+        .withColumn("ch", F.pmod(F.xxhash64("sid"), F.col("nch")))
+        .localCheckpoint(eager=True)
     )
-    b = pat.select(F.col("sid").alias("sb"), "gid", "g60")
-    if n_sets <= PARTITIONED_SETSIM_SETS:
-        # Broadcast tier (the documented S ≪ D premise): the mask lookup
-        # and the probe side are broadcast, so the candidate stream flows
-        # probe→verify→filter in ONE stage with nothing pair-sized ever
-        # shuffled or spilled.
-        # Probe-side fan-out guard (the r7 bootstrap-parallelism class):
-        # pat is only S*(K+1) narrow rows, so AQE coalesces it to ~1
-        # partition — blind to the candidate JOIN's output fan-out — and
-        # the whole probe→verify stream would run on one task (measured
-        # 326s at sf1). Round-robin repartition to core count keeps the
-        # row SET identical and spreads pair production.
-        a = pat.repartition(spark.sparkContext.defaultParallelism).select(
-            F.col("sid").alias("sa"), "gid", "g60"
-        )
-        cand = a.join(F.broadcast(b), ["gid", "g60"]).filter(F.col("sa") < F.col("sb"))
-        verified0 = cand.join(F.broadcast(sla), "sa").join(F.broadcast(slb), "sb")
-    else:
-        # Partitioned tier (r10, VERDICT r9 #3): past the broadcast
-        # budget (S·(K+1) probe rows + 2 S-row mask relations no longer
-        # fit executor memory — the r9 sf30 OOM), the SAME candidate/
-        # verify algebra runs as keyed shuffle joins. The one invariant
-        # that MUST survive the tier switch is that NOTHING PAIR-SIZED
-        # ever crosses a shuffle boundary: the first cut of this tier
-        # joined candidates to their masks after the pair join and the
-        # sf30 probe wrote 63 GB of pair-stream shuffle before filling
-        # the disk. So the masks travel WITH the probe rows instead —
-        # one input-sized shuffle_hash join (S·(K+1) rows widened by
-        # W≈1–3 longs + n) — and the (gid, g60) self-join then produces
-        # pairs, popcount-verifies, and τ-filters INSIDE one stage,
-        # exactly the probe→verify→filter pipelining the broadcast tier
-        # gets for free. shuffle_hash pinned everywhere (corpus-sized
-        # sides; never a compressed-bytes broadcast flip), and the
-        # checkpoint keeps the enrich join from running once per
-        # self-join side. Hot buckets are hash-chunked B = ⌈pop/CHUNK⌉
-        # ways per side (see PARTITIONED_SETSIM_CHUNK: AQE skew split
-        # sizes inputs and cannot see the pair fan-out, so without this
-        # the g60=0 buckets serialize the stage's tail onto a handful of
-        # straggler tasks); each pair meets exactly once in one of the
-        # B² (ca, cb) cells, so the verified pair set — and the query's
-        # output — is unchanged by the chunk grid.
-        bpop = pat.groupBy("gid", "g60").agg(
-            F.count(F.lit(1)).cast("bigint").alias("bpop")
-        )
-        enriched = (
-            pat.hint("shuffle_hash")
-            .join(sl.hint("shuffle_hash"), "sid")
-            .hint("shuffle_hash")
-            .join(bpop.hint("shuffle_hash"), ["gid", "g60"])
-            .withColumn(
-                "nch",
-                F.expr(
-                    "CAST((bpop + {c} - 1) DIV {c} AS BIGINT)".format(
-                        c=PARTITIONED_SETSIM_CHUNK
-                    )
-                ),
-            )
-            .withColumn("ch", F.pmod(F.xxhash64("sid"), F.col("nch")))
-            .localCheckpoint(eager=True)
-        )
-        chunk_ids = F.sequence(F.lit(0).cast("bigint"), F.col("nch") - 1)
-        ea = enriched.select(
-            F.col("sid").alias("sa"), "gid", "g60",
-            F.col("mw").alias("mw_a"), F.col("n").alias("na"),
-            F.col("ch").alias("ca"),
-            F.explode(chunk_ids).alias("cb"),
-        )
-        eb = enriched.select(
-            F.col("sid").alias("sb"), "gid", "g60",
-            F.col("mw").alias("mw_b"), F.col("n").alias("nb"),
-            F.explode(chunk_ids).alias("ca"),
-            F.col("ch").alias("cb"),
-        )
-        verified0 = (
-            ea.hint("shuffle_hash")
-            .join(eb.hint("shuffle_hash"), ["gid", "g60", "ca", "cb"])
-            .filter(F.col("sa") < F.col("sb"))
-        )
+    chunk_ids = F.sequence(F.lit(0).cast("bigint"), F.col("nch") - 1)
+    ea = enriched.select(
+        F.col("sid").alias("sa"), "gid", "g60",
+        F.col("mw").alias("mw_a"), F.col("n").alias("na"),
+        F.col("ch").alias("ca"),
+        F.explode(chunk_ids).alias("cb"),
+    )
+    eb = enriched.select(
+        F.col("sid").alias("sb"), "gid", "g60",
+        F.col("mw").alias("mw_b"), F.col("n").alias("nb"),
+        F.explode(chunk_ids).alias("ca"),
+        F.col("ch").alias("cb"),
+    )
+    verified0 = (
+        ea.hint("shuffle_hash")
+        .join(eb.hint("shuffle_hash"), ["gid", "g60", "ca", "cb"])
+        .filter(F.col("sa") < F.col("sb"))
+    )
     c = F.aggregate(
         F.zip_with(
             "mw_a", "mw_b", lambda x, y: F.bit_count(x.bitwiseAND(y)).cast("long")
@@ -1557,7 +1394,7 @@ WITH toks AS (
 ), grams AS (
   SELECT doc_id,
          unnest(list_transform(range(1, len(t) - {SPAN_K - 2}),
-                i -> CAST('0x' || substr(md5(array_to_string(t[i:i+{SPAN_K - 1}], ' ')), 1, 15) AS BIGINT))) AS g
+                i -> {md5_int60_sql(f"array_to_string(t[i:i+{SPAN_K - 1}], ' ')")})) AS g
   FROM toks WHERE len(t) >= {SPAN_K}
 ), df AS (
   SELECT g, count(DISTINCT doc_id) AS n_docs FROM grams GROUP BY g
@@ -1595,19 +1432,9 @@ def dedup_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = F.sequence(F.lit(1), F.size("t") - (SPAN_K - 1))
     gram = F.transform(
         idx,
-        lambda i: F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        " ", *[F.element_at("t", i + j) for j in range(SPAN_K)]
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint"),
+        lambda i: md5_int60(
+            F.concat_ws(" ", *[F.element_at("t", i + j) for j in range(SPAN_K)])
+        ),
     )
     grams = base.select("doc_id", F.explode(gram).alias("g"))
     df_ = grams.groupBy("g").agg(F.countDistinct("doc_id").alias("n_docs"))

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import md5_int60, md5_int60_sql
 from ..registry import register
 from ..sources import load_table
 
@@ -800,7 +801,7 @@ def privacy_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "privacy_dp_quantile_expmech",
     tags=("privacy", "stats"),
-    oracle="""
+    oracle=f"""
 WITH spend AS (
   SELECT o_custkey,
          CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
@@ -830,7 +831,7 @@ WITH spend AS (
          sum(w) OVER () AS total_w
   FROM wt
 ), coin AS (
-  SELECT CAST(CAST('0x' || substr(md5('dpq-2026-seed'), 1, 15) AS BIGINT)
+  SELECT CAST({md5_int60_sql("'dpq-2026-seed'")}
               AS HUGEINT)
          % (SELECT max(total_w) FROM pre) AS r
 ), pick AS (
@@ -1014,7 +1015,7 @@ def privacy_dp_quantile_expmech(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "privacy_synthetic_marginals",
     tags=("privacy", "pipeline"),
-    oracle="""
+    oracle=f"""
 WITH orig AS (
   SELECT c_mktsegment AS seg, CAST(count(*) AS BIGINT) AS c
   FROM customer GROUP BY 1
@@ -1029,7 +1030,7 @@ WITH orig AS (
   FROM orig
 ), coins AS (
   SELECT c_custkey AS i,
-         CAST('0x' || substr(md5('syn-' || c_custkey), 1, 15) AS BIGINT)
+         {md5_int60_sql("'syn-' || c_custkey")}
            % (SELECT n FROM n) AS u
   FROM customer
 ), synth AS (
@@ -1086,15 +1087,7 @@ def privacy_synthetic_marginals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     coins = cust.crossJoin(F.broadcast(n)).select(
         (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("syn-"), F.col("c_custkey").cast("string"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint")
+            md5_int60(F.concat(F.lit("syn-"), F.col("c_custkey").cast("string")))
             % F.col("n")
         ).alias("u")
     )

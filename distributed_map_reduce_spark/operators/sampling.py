@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import md5_int60, md5_int60_sql
 from ..registry import register
 from ..sources import load_table
 
@@ -241,7 +242,7 @@ SELECT rn AS pick, doc_id, n_chars
 FROM (
   SELECT doc_id, n_chars,
          row_number() OVER (
-           ORDER BY CAST('0x' || substr(md5('pri:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) * 1.0
+           ORDER BY {md5_int60_sql("'pri:' || CAST(doc_id AS VARCHAR)")} * 1.0
                     / n_chars,
                     doc_id
          ) AS rn
@@ -273,13 +274,7 @@ def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     local k best priorities; no global sort, no RNG state, and the
     sample is reproducible across reruns, engines, and cluster sizes."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    u = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("pri:"), F.col("doc_id").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    u = md5_int60(F.concat(F.lit("pri:"), F.col("doc_id").cast("string")))
     pri = u.cast("double") / F.col("n_chars")
     # bottom-k FIRST (TakeOrderedAndProject — k rows/partition forwarded),
     # then rank the k survivors; a global row_number window over the full

@@ -31,26 +31,17 @@ pins the error envelope (CMS estimate >= true count, always).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import md5_int60, md5_int60_sql
 from ..registry import register
 from ..sources import load_table
 
-# 60-bit integer from the first 15 hex chars of md5 — same reduction the
-# MinHash family uses (dedup.py); DuckDB twin: CAST('0x'||substr(md5(x),1,15) AS BIGINT)
+# md5_int60: the 60-bit integer from the first 15 hex chars of md5 — the
+# same reduction the MinHash family uses (dedup.py).
 HASH_BITS = 60
 HASH_SPACE = float(1 << HASH_BITS)
-
-
-def md5_int60(col: Column) -> Column:
-    """Portable 60-bit hash of a string column (Spark side)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
-def _md5_int60_sql(expr: str) -> str:
-    """DuckDB twin of :func:`md5_int60`."""
-    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
 def _tokens(docs: DataFrame) -> DataFrame:
@@ -73,7 +64,7 @@ KMV_K = 256
     tags=("sketch", "agg"),
     oracle=f"""
 WITH hashes AS (
-  SELECT DISTINCT {_md5_int60_sql('w')} AS h
+  SELECT DISTINCT {md5_int60_sql('w')} AS h
   FROM ({_TOKENS_SQL})
 ), bottomk AS (
   SELECT h FROM hashes ORDER BY h LIMIT {KMV_K}
@@ -141,7 +132,7 @@ CMS_TOPN = 20  # report the true top-N tokens with their CMS estimates
 WITH toks AS ({_TOKENS_SQL}),
 rows_ AS (SELECT unnest(range({CMS_D})) AS j),
 cells AS (
-  SELECT j, {_md5_int60_sql("j || ':' || w")} % {CMS_W} AS bucket,
+  SELECT j, {md5_int60_sql("j || ':' || w")} % {CMS_W} AS bucket,
          CAST(count(*) AS BIGINT) AS c
   FROM toks, rows_
   GROUP BY j, bucket
@@ -156,7 +147,7 @@ est AS (
   FROM truth t
   JOIN rows_ r ON TRUE
   JOIN cells c
-    ON c.j = r.j AND c.bucket = {_md5_int60_sql("r.j || ':' || t.w")} % {CMS_W}
+    ON c.j = r.j AND c.bucket = {md5_int60_sql("r.j || ':' || t.w")} % {CMS_W}
   GROUP BY t.w, t.true_count
 )
 SELECT w AS token, true_count, cms_estimate,
@@ -241,7 +232,7 @@ LC_M = 4096  # linear-counting bitmap width
     oracle=f"""
 WITH toks AS ({_TOKENS_SQL}),
 occupied AS (
-  SELECT CAST(count(DISTINCT {_md5_int60_sql('w')} % {LC_M}) AS BIGINT) AS filled
+  SELECT CAST(count(DISTINCT {md5_int60_sql('w')} % {LC_M}) AS BIGINT) AS filled
   FROM toks
 ),
 truth AS (
@@ -289,7 +280,7 @@ def sketch_linear_counting(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lang_hashes_sql(lang: str) -> str:
     return f"""
-  SELECT DISTINCT {_md5_int60_sql('w')} AS h
+  SELECT DISTINCT {md5_int60_sql('w')} AS h
   FROM (SELECT unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS w
         FROM documents WHERE lang = '{lang}')
 """
@@ -514,7 +505,7 @@ WITH tok AS (
 ), b AS (
   SELECT DISTINCT w FROM tok WHERE source = 'src1'
 ), bits AS (
-  SELECT DISTINCT {_md5_int60_sql("'bf' || h || '-' || w")} % {BF_M} AS bit
+  SELECT DISTINCT {md5_int60_sql("'bf' || h || '-' || w")} % {BF_M} AS bit
   FROM a, (SELECT unnest(range({BF_K})) AS h)
 ), probe AS (
   SELECT b.w,
@@ -523,7 +514,7 @@ WITH tok AS (
   FROM b
   CROSS JOIN (SELECT unnest(range({BF_K})) AS h) hs
   LEFT JOIN bits
-    ON bits.bit = {_md5_int60_sql("'bf' || hs.h || '-' || b.w")} % {BF_M}
+    ON bits.bit = {md5_int60_sql("'bf' || hs.h || '-' || b.w")} % {BF_M}
   LEFT JOIN a ON a.w = b.w
   GROUP BY b.w
 ), card AS (
@@ -628,7 +619,7 @@ HLL_W = 54  # hash bits left after the register index
     oracle=f"""
 WITH toks AS ({_TOKENS_SQL}),
 h AS (
-  SELECT DISTINCT w, {_md5_int60_sql('w')} AS hv FROM toks
+  SELECT DISTINCT w, {md5_int60_sql('w')} AS hv FROM toks
 ), reg AS (
   SELECT hv % {HLL_M} AS j,
          CAST(hv // {HLL_M} AS BIGINT) AS wbits

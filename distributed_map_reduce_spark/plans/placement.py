@@ -28,32 +28,25 @@ import hashlib
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Portable key→int: first 15 md5 hex chars as a bigint (same recipe as
-# the MinHash constants — fits int64, replays in DuckDB as
-# CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)).
-def _hash_int(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
+from ..functions import md5_int60, md5_int60_sql
 
 
+# Python twin of md5_int60, for the compile-time node positions.
 def _hash_int_py(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
-def _hash_int_sql(expr: str) -> str:
-    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
 def naive_owner(key: Column, nodes: list[str]) -> Column:
     """nodes[H(key) % n] over the sorted node list (`id.js:107-114`)."""
     ns = sorted(nodes)
     arr = F.array(*[F.lit(n) for n in ns])
-    return F.element_at(arr, (_hash_int(key) % len(ns) + 1).cast("int"))
+    return F.element_at(arr, (md5_int60(key) % len(ns) + 1).cast("int"))
 
 
 def naive_owner_sql(key_expr: str, nodes: list[str]) -> str:
     ns = sorted(nodes)
     arr = "[" + ", ".join(f"'{n}'" for n in ns) + "]"
-    return f"({arr})[CAST({_hash_int_sql(key_expr)} % {len(ns)} + 1 AS INT)]"
+    return f"({arr})[CAST({md5_int60_sql(key_expr)} % {len(ns)} + 1 AS INT)]"
 
 
 def consistent_owner(key: Column, nodes: list[str]) -> Column:
@@ -61,7 +54,7 @@ def consistent_owner(key: Column, nodes: list[str]) -> Column:
     wrapping to the ring's first node (`id.js:115-126`). Node positions
     are compile-time constants, so the ring walk folds into one CASE."""
     ring = sorted((_hash_int_py(n), n) for n in nodes)
-    kpos = _hash_int(key)
+    kpos = md5_int60(key)
     out = F.lit(ring[0][1])  # wrap default
     for pos, node in reversed(ring):
         out = F.when(kpos <= pos, F.lit(node)).otherwise(out)
@@ -70,7 +63,7 @@ def consistent_owner(key: Column, nodes: list[str]) -> Column:
 
 def consistent_owner_sql(key_expr: str, nodes: list[str]) -> str:
     ring = sorted((_hash_int_py(n), n) for n in nodes)
-    kpos = _hash_int_sql(key_expr)
+    kpos = md5_int60_sql(key_expr)
     whens = " ".join(f"WHEN {kpos} <= {pos} THEN '{node}'" for pos, node in ring)
     return f"(CASE {whens} ELSE '{ring[0][1]}' END)"
 
@@ -80,7 +73,7 @@ def rendezvous_owner(key: Column, nodes: list[str]) -> Column:
     (`id.js:127-148`); ties break to the first node in sorted order —
     deterministic and engine-identical."""
     ns = sorted(nodes)
-    scores = [_hash_int(F.concat(key, F.lit("|" + n))) for n in ns]
+    scores = [md5_int60(F.concat(key, F.lit("|" + n))) for n in ns]
     out = F.lit(ns[-1])
     for i in range(len(ns) - 2, -1, -1):
         cond = scores[i] >= scores[i + 1]
@@ -92,7 +85,7 @@ def rendezvous_owner(key: Column, nodes: list[str]) -> Column:
 
 def rendezvous_owner_sql(key_expr: str, nodes: list[str]) -> str:
     ns = sorted(nodes)
-    scores = [_hash_int_sql(f"{key_expr} || '|{n}'") for n in ns]
+    scores = [md5_int60_sql(f"{key_expr} || '|{n}'") for n in ns]
     whens = []
     for i in range(len(ns) - 1):
         cond = " AND ".join(f"{scores[i]} >= {scores[j]}" for j in range(i + 1, len(ns)))

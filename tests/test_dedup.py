@@ -125,27 +125,20 @@ def test_connected_components_long_chain(spark):
     assert set(got.values()) == {"d000"}  # one component, min-id label
 
 
-def test_prefix_filter_join_tiers_row_identical(spark, monkeypatch):
-    """dedup_prefix_filter_join has two physical tiers keyed on the
-    measured distinct-set count (broadcast below PARTITIONED_SETSIM_SETS,
-    keyed shuffle_hash joins above — the r10 third-decade fallback for
-    the r9 sf30 broadcast OOM). The tier switch must be plan-only:
-    forcing the partitioned tier on the same input must reproduce the
-    broadcast tier's rows exactly."""
+def test_prefix_filter_join_chunk_grid_row_identical(spark, monkeypatch):
+    """dedup_prefix_filter_join splits hot (gid, g60) buckets into a
+    B² chunk grid. Forcing CHUNK=2 (every bucket splits into B² cells)
+    must reproduce the default run's rows exactly: the anti-straggler
+    path is pair-exact, not just the B=1 degenerate case sf0.001
+    exercises."""
     from distributed_map_reduce_spark.operators import dedup as D
 
     sf = "/root/testdata/sf0.001"
-    broadcast_rows = sorted(map(tuple, D.dedup_prefix_filter_join(spark, sf).collect()))
-    monkeypatch.setattr(D, "PARTITIONED_SETSIM_SETS", 0)
-    partitioned_rows = sorted(map(tuple, D.dedup_prefix_filter_join(spark, sf).collect()))
-    assert broadcast_rows == partitioned_rows
-    assert len(broadcast_rows) > 0
-    # Force the intra-bucket chunk grid too (CHUNK=2 → every bucket
-    # splits into B² cells): the hot-bucket anti-straggler path must be
-    # pair-exact, not just the B=1 degenerate case sf0.001 exercises.
+    default_rows = sorted(map(tuple, D.dedup_prefix_filter_join(spark, sf).collect()))
+    assert len(default_rows) > 0
     monkeypatch.setattr(D, "PARTITIONED_SETSIM_CHUNK", 2)
     chunked_rows = sorted(map(tuple, D.dedup_prefix_filter_join(spark, sf).collect()))
-    assert broadcast_rows == chunked_rows
+    assert default_rows == chunked_rows
 
 
 def test_capped_lsh_drops_mega_buckets_keeps_ordinary_pairs(spark):
@@ -166,3 +159,21 @@ def test_capped_lsh_drops_mega_buckets_keeps_ordinary_pairs(spark):
     capped = {(r["doc_a"], r["doc_b"]) for r in minhash_lsh_pairs_capped(docs).collect()}
     assert (100, 101) in capped                      # ordinary pair kept
     assert not any(a <= 20 and b <= 20 for a, b in capped)  # clone family dropped
+
+
+def test_capped_lsh_with_unbounded_cap_equals_pair_generator(spark):
+    """With a cap no bucket reaches, the capped generator (array verify)
+    must emit exactly the pair-exact generator's rows (relational
+    verify): same band keys, same buckets, same Jaccard. Checked on the
+    planted corpus and on the sf0.001 documents."""
+    from distributed_map_reduce_spark.operators.dedup import minhash_lsh_pairs_capped
+    from distributed_map_reduce_spark.sources import load_table
+
+    fam = [(i, BASE) for i in range(1, 6)] + [
+        (10, NEAR_DUP), (11, NEAR_DUP.replace("quick", "swift")), (12, UNRELATED)
+    ]
+    planted = spark.createDataFrame(fam, "doc_id long, text string")
+    for docs in (planted, load_table(spark, "/root/testdata/sf0.001", "documents")):
+        pairs = sorted(map(tuple, minhash_lsh_pairs(docs).collect()))
+        capped = sorted(map(tuple, minhash_lsh_pairs_capped(docs, cap=10**9).collect()))
+        assert pairs and capped == pairs

@@ -185,6 +185,20 @@ def test_candidate_fed_verifiers_not_block_quadratic(spark, sf_dir):
     assert "label" not in plan2.split("ReadSchema:")[1]  # label column not even read
 
 
+def test_prefix_filter_join_single_keyed_plan(spark, sf_dir):
+    """dedup_prefix_filter_join has one physical plan at every scale: no
+    BroadcastNestedLoopJoin anywhere, and the set-pair join is a
+    ShuffledHashJoin keyed on (gid, g60, ca, cb) — the chunked postings
+    self-join, never a broadcast of a corpus-sized relation."""
+    import re
+
+    plan = _plan(spark, sf_dir, "dedup_prefix_filter_join")
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert re.search(
+        r"ShuffledHashJoin\nLeft keys \[4\]: \[gid#\d+L, g60#\d+L, ca#\d+L, cb#\d+L\]", plan
+    )
+
+
 def test_partitioned_write_prunes_on_read(spark, sf_dir, tmp_path):
     """A lang-partitioned staging write must plan read-back filters as
     PartitionFilters (directory pruning), not data filters."""

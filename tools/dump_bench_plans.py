@@ -2,6 +2,10 @@
 to plans/<round>/<name>_<suffix>.txt — the optimization-round evidence
 the judge checks plan claims against.
 
+Run-specific ids (expression ids ``#123``, ``plan_id=123``, ``RDD[123]``)
+are replaced with placeholders, so an unchanged plan dumps byte-identical
+from any session and a before/after diff shows only real plan changes.
+
 Usage: python tools/dump_bench_plans.py <suffix> --round DIR [--sf DIR] [name ...]
 """
 
@@ -9,6 +13,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -16,6 +21,16 @@ sys.path.insert(0, REPO)
 
 from distributed_map_reduce_spark import registry  # noqa: E402
 from distributed_map_reduce_spark.session import get_spark  # noqa: E402
+
+
+def normalize_plan(plan: str) -> str:
+    """Expression ids renumber in order of first appearance (``#1``,
+    ``#2`` …), so the plan keeps which attributes are the same one;
+    plan and RDD ids become fixed placeholders."""
+    ids: dict[str, str] = {}
+    plan = re.sub(r"#(\d+)", lambda m: "#" + ids.setdefault(m.group(1), str(len(ids) + 1)), plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    return re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
 
 
 def main() -> None:
@@ -34,8 +49,10 @@ def main() -> None:
     for name in names:
         try:
             df = qs[name].fn(spark, args.sf)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
+            plan = normalize_plan(
+                df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
             )
         except Exception as exc:  # noqa: BLE001
             plan = f"EXPLAIN FAILED: {exc}"
